@@ -196,10 +196,14 @@ class VectorRAG:
 
         - ``lsh``: random-hyperplane bucket relation (build_lsh_index),
           bucketed by (table, bucket) — a probe reads L point buckets;
-        - ``ivf``: k-means-trained cells (clustering.kmeans_train →
-          assign_cells), the assignment table bucketed by cell_id and
-          the k×dim centroid table stored as ``{name}__centroids`` —
-          a probe prunes to n_probe cell partitions.
+        - ``ivf``: k-means-trained cells. clustering.kmeans_train
+          fits the centroids on the driver over a bounded sample (the
+          seeds plus at most 256 vectors per cell, one collect), then
+          assign_cells places every vector map-only against the
+          broadcast centroids. The assignment table is bucketed by
+          cell_id and the k×dim centroid table stored as
+          ``{name}__centroids`` — a probe prunes to n_probe cell
+          partitions.
 
         Idempotent like the reference's DDL: a second call is a no-op.
         Returns True when the index was created, False when it already
@@ -278,7 +282,8 @@ class VectorRAG:
         """Incremental index maintenance — d7's new-batch-only
         discipline applied to the M5 lifecycle: only vec_ids NOT yet in
         the index get their bucket/cell rows computed and appended;
-        re-upserting a batch is a no-op. Parameters come from the
+        re-upserting a batch is a no-op, and an id repeated within a
+        batch is appended once. Parameters come from the
         persisted ``{name}__meta`` so the appended rows are
         probe-compatible by construction.
 
@@ -314,7 +319,18 @@ class VectorRAG:
         # likeliest place a provider regression lands a degenerate row
         gated, _ = embedding_qa_gate(new_vectors, dim=int(m["dim"]))
         existing_ids = spark.table(name).select("vec_id").distinct()
-        fresh = gated.join(existing_ids, "vec_id", "left_anti")
+        # one row per vec_id even when the batch repeats an id (cell
+        # assignment is map-only, so nothing downstream collapses
+        # them); materialized once so the count and the append below
+        # share one gate + anti-join
+        fresh = (
+            gated.join(existing_ids, "vec_id", "left_anti")
+            .dropDuplicates(["vec_id"])
+            .localCheckpoint(eager=True)
+        )
+        n_new = fresh.count()
+        if not n_new:
+            return 0
         if m["kind"] == "lsh":
             from ai_iceberg_demo_spark.vector.similarity import build_lsh_index
 
@@ -325,7 +341,6 @@ class VectorRAG:
                 seed=m["seed"],
                 dim=m["dim"],
             )
-            n_new = rows.select("vec_id").distinct().count()
             rows.write.format("parquet").mode("append").bucketBy(
                 16, "t", "b"
             ).saveAsTable(name)
@@ -333,7 +348,6 @@ class VectorRAG:
             from ai_iceberg_demo_spark.vector.similarity import assign_cells
 
             rows = assign_cells(fresh, spark.table(f"{name}__centroids"))
-            n_new = rows.select("vec_id").distinct().count()
             rows.write.format("parquet").mode("append").bucketBy(
                 min(16, int(m["n_cells"])), "cell_id"
             ).saveAsTable(name)

@@ -12,13 +12,11 @@ Spark-first design:
 - assignment = corpus ⨯ broadcast(centroids) scored map-side, argmin
   via ``min(struct(dist, cell_id))`` — a partial-aggregable groupBy,
   no window, no Python;
-- centroid recompute = posexplode to (cell, dim) partials →
-  per-(cell,dim) avg → re-assemble with sort+transform. Shuffle rows
-  per Lloyd round are O(vectors × dim) compact doubles; k×dim output
-  stays broadcastable;
-- each round ``localCheckpoint``s (d6's pattern) so plan depth stays
-  O(1); on a real cluster swap for ``checkpoint()`` to durable
-  storage.
+- training collects a bounded sample to the driver — the k seeds plus
+  at most ``_TRAIN_PER_CELL``·k other vectors, one top-n job — and runs
+  Lloyd rounds there in numpy. The sample is capped by k, not by the
+  corpus, so the driver holds at most (1 + _TRAIN_PER_CELL)·k vectors
+  at any scale; only the assignment of the full corpus is distributed.
 
 Determinism: centroid init = the first k corpus vectors (vec_id < k),
 distances rounded to 4 before the argmin with cell_id as tie-break —
@@ -196,36 +194,63 @@ def _assign2_sql(src: str, k_sql: str) -> str:
         )"""
 
 
+_TRAIN_PER_CELL = 256  # FAISS's usual per-centroid training-set size
+
+
+def training_set(corpus: DataFrame, k: int) -> tuple[list, list]:
+    """The vectors kmeans_train fits on, collected in one top-n job:
+    the seeds (vec_id < k) plus the ``_TRAIN_PER_CELL``·k other vectors
+    of lowest ``xxhash64(vec_id)`` (ties by vec_id). Returns (seeds,
+    others) as (vec_id, embedding) rows, seeds by vec_id."""
+    cap = _TRAIN_PER_CELL * k
+    other = (F.col("vec_id") >= k).alias("_other")
+    rows = (
+        corpus.select("vec_id", "embedding", other, F.xxhash64("vec_id").alias("_h"))
+        .orderBy("_other", "_h", "vec_id")
+        .limit(k + cap)
+        .collect()
+    )
+    seeds = sorted((r for r in rows if not r["_other"]), key=lambda r: r["vec_id"])
+    # k + cap rows hold every seed; with fewer than k seeds the tail
+    # carries extra others, trimmed back to the cap
+    others = [r for r in rows if r["_other"]][:cap]
+    return [r[:2] for r in seeds], [r[:2] for r in others]
+
+
 def kmeans_train(
     corpus: DataFrame, k: int = KMEANS_K, n_iter: int = KMEANS_ITER
 ) -> DataFrame:
-    """Lloyd's algorithm, DataFrame-native: assign → per-dim mean →
-    new centroids, ``n_iter`` rounds. Centroid recompute explodes to
-    (cell_id, dim_i, x) partials (map-side combine on a uniform
-    (cell, dim) key space) and re-assembles the k×dim table with
-    array_sort+transform — never a driver-side collect of vectors.
-    Empty cells keep their previous centroid (left join + coalesce),
-    matching scikit-learn's no-relocation behavior for this fixture.
-    Returns the final (cell_id, centroid) table."""
-    dcorpus = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
-    centroids = seed_centroids(corpus, k).localCheckpoint(eager=True)
+    """Lloyd's algorithm on the driver over ``training_set``: seeds are
+    the vectors with vec_id < k (cell_id = vec_id), each round sends
+    every training vector to the cell at the smallest 4-decimal-rounded
+    l2 distance (ties to the lowest cell_id — kmeans_assign's rule) and
+    moves each centroid to its members' mean. Empty cells keep their
+    previous centroid, matching scikit-learn's no-relocation behavior
+    for this fixture. Training collects a bounded sample — the k×dim
+    result is what the distributed assignment broadcasts. Returns the
+    final (cell_id, centroid) table."""
+    import numpy as np
+
+    seeds, others = training_set(corpus, k)
+    schema = (
+        f"cell_id {corpus.schema['vec_id'].dataType.simpleString()}, "
+        "centroid array<double>"
+    )
+    spark = corpus.sparkSession
+    if not seeds:
+        return spark.createDataFrame([], schema)
+    x = np.array([r[1] for r in seeds + others], dtype=np.float64)
+    cen = x[: len(seeds)].copy()
     for _ in range(n_iter):
-        assigned = kmeans_assign(dcorpus, centroids).join(dcorpus, "vec_id")
-        dims = assigned.select(
-            "cell_id", F.posexplode("embedding").alias("dim_i", "x")
-        )
-        dim_means = dims.groupBy("cell_id", "dim_i").agg(F.avg("x").alias("m"))
-        new_cen = dim_means.groupBy("cell_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim_i", "m"))), lambda s: s["m"]
-            ).alias("centroid")
-        )
-        centroids = (
-            centroids.select("cell_id", F.col("centroid").alias("_prev"))
-            .join(new_cen, "cell_id", "left")
-            .select("cell_id", F.coalesce("centroid", "_prev").alias("centroid"))
-        ).localCheckpoint(eager=True)
-    return centroids
+        dist = np.stack([np.sqrt(((x - c) ** 2).sum(axis=1)) for c in cen], axis=1)
+        cell = np.round(dist, 4).argmin(axis=1)  # first minimum = lowest cell_id
+        for j in range(len(cen)):
+            members = x[cell == j]
+            if len(members):
+                cen[j] = members.mean(axis=0)
+    return spark.createDataFrame(
+        [(r[0], c.tolist()) for r, c in zip(seeds, cen)], schema
+    )
 
 
 def _assign_sql(src: str, k_sql: str | None = None) -> str:
@@ -272,8 +297,10 @@ def v11_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     name="v11b_kmeans_train",
     survey_ref="training-data (clustering)",
     doc=f"{KMEANS_ITER}-round Lloyd k-means (k={KMEANS_K}) over the "
-    "embeddings table, fully distributed (posexplode partial means, "
-    "localCheckpoint per round); output = per-cell size and rounded "
+    "embeddings table: training collects a bounded sample (the seeds "
+    f"plus at most {_TRAIN_PER_CELL}·k hash-picked vectors) and runs "
+    "the rounds on the driver, the final assignment is distributed; "
+    "output = per-cell size and rounded "
     "inertia after the final assignment. Iterative fixpoint loops "
     "aren't ANSI-SQL, so this is a rows-only check; the single "
     "assignment step it iterates IS hash-checked as v11.",
@@ -903,7 +930,7 @@ def kmeans_train_rounded(
     every recompute — numerically a hair off `kmeans_train`, but the
     rounding quantizes away cross-engine float-sum noise, so a fixed
     unroll replays exactly in SQL (g1/g2's discipline applied to
-    clustering). Same distributed shape as kmeans_train: posexplode
+    clustering). Trains in Spark, not on the driver: posexplode
     partial means, broadcast centroids, localCheckpoint per round."""
     dcorpus = corpus.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
     centroids = seed_centroids(corpus, k).localCheckpoint(eager=True)
@@ -967,7 +994,8 @@ def _v11c_round_sql(prev_cen: str, idx: int) -> str:
     "discipline), so clustering TRAINING is hash-checked end-to-end, "
     "not just the single assignment step (v11) or rows-only "
     "invariants (v11b). Output: per-cell size + rounded inertia "
-    "after the final assignment. Same distributed plan as v11b.",
+    "after the final assignment. Trains in Spark (posexplode partial "
+    "means, localCheckpoint per round).",
     oracle=f"""
         WITH cen0 AS (
             SELECT vec_id AS cell_id, CAST(embedding AS DOUBLE[]) AS centroid

@@ -440,22 +440,29 @@ def v3b_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def assign_cells(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF cell assignment: each vector goes to its nearest centroid
-    (max cosine). Broadcast the (small) centroid set; argmax via max_by
-    — map-side only, no shuffle of the corpus beyond the final groupBy
-    on vec_id, which AQE coalesces."""
+    (max cosine), ties to the lowest cell_id. Map-only: the k centroids
+    broadcast as ONE row holding their array, each corpus row scores
+    all of them in place and ``array_max(struct(score, -cell_id,
+    cell_id))`` picks the cell — no shuffle of the corpus, and one
+    output row per input row (callers dedup vec_id)."""
     # norms hoisted per corpus row / per centroid (with_norm pattern);
     # only the dot is per (row, centroid)
     c = with_norm(corpus, "embedding", "_cv", "_cn")
-    cen = with_norm(centroids, "centroid", "_zv", "_zn")
-    scored = c.crossJoin(F.broadcast(cen)).select(
-        "vec_id",
-        "embedding",
-        F.col("cell_id"),
-        (dot(F.col("_cv"), F.col("_zv")) / (F.col("_cn") * F.col("_zn"))).alias("c_score"),
+    cells = with_norm(centroids, "centroid", "_zv", "_zn").agg(
+        F.collect_list(F.struct("cell_id", "_zv", "_zn")).alias("_cells")
     )
-    return scored.groupBy("vec_id").agg(
-        F.max_by("cell_id", "c_score").alias("cell_id"),
-        F.first("embedding").alias("embedding"),
+    best = F.array_max(
+        F.transform(
+            "_cells",
+            lambda z: F.struct(
+                (dot(F.col("_cv"), z["_zv"]) / (F.col("_cn") * z["_zn"])).alias("s"),
+                (-z["cell_id"]).alias("neg_id"),
+                z["cell_id"].alias("cell_id"),
+            ),
+        )
+    )
+    return c.crossJoin(F.broadcast(cells)).select(
+        "vec_id", best["cell_id"].alias("cell_id"), "embedding"
     )
 
 
@@ -568,7 +575,7 @@ def ivf_probe(
 def v3c_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_iceberg_demo_spark.vector.clustering import kmeans_train
 
-    # r12: Lloyd-round assignment + rerank map work serializes on the
+    # r12: cell assignment + rerank map work serializes on the
     # single-file fixture scan — fan out (see t17b)
     corpus = fan_out_small_input(load_table(spark, "embeddings", sf_dir))
     centroids = kmeans_train(corpus, k=16, n_iter=2)
@@ -2551,13 +2558,14 @@ _V3E_PROBE = 4
     doc="the IVF probe itself, hash-checked end-to-end: seed centroids "
     f"(vec_id < {_V3E_CELLS}, ivf_topk's train-free fallback), "
     "ROUNDED-cosine cell assignment with an explicit (score DESC, "
-    "cell_id) tie-break (assign_cells' max_by is float-tie "
-    f"nondeterministic across engines), top-{_V3E_PROBE} probe cells "
+    "cell_id) tie-break (assign_cells breaks ties the same way, but on "
+    "unrounded scores whose last bits differ across engines), "
+    f"top-{_V3E_PROBE} probe cells "
     "by rounded query-centroid cosine, exact rerank of the probed "
     "cells' members, top-5. Same plan shape as ivf_probe / v3c "
     "(broadcast centroid cross → cell equi-join → candidate-only "
-    "rerank); the assignment window is vec_id-partitioned — the same "
-    "key the index build shuffles on. v3c keeps the TRAINED-centroid "
+    "rerank); the assignment window is vec_id-partitioned. v3c keeps "
+    "the TRAINED-centroid "
     "path (recall-tested); this pins the probe arithmetic.",
     oracle=f"""
         WITH cen AS (

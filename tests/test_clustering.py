@@ -3,17 +3,23 @@ planted-twin dedup."""
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from ai_iceberg_demo_spark.tables import load_table
 from ai_iceberg_demo_spark.vector.clustering import (
     KMEANS_K,
+    _TRAIN_PER_CELL,
     _TWIN_OFFSET,
     d8_semdedup,
     kmeans_assign,
     kmeans_train,
     salt_near_dups,
     seed_centroids,
+    training_set,
+    v11b_kmeans_train,
 )
 from tests.conftest import SF_DIR
 
@@ -236,3 +242,86 @@ def test_power_iteration_converges_to_numpy_top_eigenvector(spark):
     cos = abs(float(v @ top_vec) / (np.linalg.norm(v) * np.linalg.norm(top_vec)))
     assert cos >= 0.9, cos
     assert abs(lam - top_val) / top_val <= 0.1, (lam, top_val)
+
+
+SF01 = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+needs_sf01 = pytest.mark.skipif(
+    not os.path.isdir(SF01), reason="sf0.1 fixture absent (single-fixture environment)"
+)
+
+
+def _lloyd_replay(seeds, others, n_iter):
+    """The training rule spelled out vector by vector: nearest seed
+    cell by 4-decimal-rounded l2 (first minimum = lowest cell_id),
+    then each non-empty cell moves to its members' mean."""
+    import numpy as np
+
+    x = [np.asarray(v, dtype=float) for _, v in seeds + others]
+    cen = [x[i].copy() for i in range(len(seeds))]
+    for _ in range(n_iter):
+        members = [[] for _ in cen]
+        for v in x:
+            d = [np.round(np.sqrt(np.sum((v - c) ** 2)), 4) for c in cen]
+            members[int(np.argmin(d))].append(v)
+        cen = [np.mean(m, axis=0) if m else c for m, c in zip(members, cen)]
+    return {vid: c for (vid, _), c in zip(seeds, cen)}
+
+
+# v11b_kmeans_train at sf0.1 from the distributed trainer this driver
+# trainer replaced: (cell_id, n_vecs, inertia)
+_V11B_SF01 = [
+    (0, 238, 226.45), (1, 257, 245.45), (2, 265, 252.8), (3, 254, 241.82),
+    (4, 244, 232.48), (5, 255, 243.3), (6, 264, 252.12), (7, 223, 212.23),
+]
+
+
+@needs_sf01
+def test_driver_trainer_keeps_distributed_trainer_cells(spark):
+    """At sf0.1 the whole corpus is the training set, so the driver
+    trainer lands on the distributed trainer's cells: same per-cell
+    sizes and rounded inertia."""
+    rows = v11b_kmeans_train(spark, SF01).collect()
+    assert [(r["cell_id"], r["n_vecs"], r["inertia"]) for r in rows] == _V11B_SF01
+
+
+@needs_sf01
+def test_kmeans_train_matches_numpy_replay(spark):
+    corpus = load_table(spark, "embeddings", SF01)
+    rows = [(r["vec_id"], r["embedding"]) for r in corpus.collect()]
+    seeds = sorted((r for r in rows if r[0] < 16), key=lambda r: r[0])
+    others = [r for r in rows if r[0] >= 16]
+    want = _lloyd_replay(seeds, others, n_iter=2)
+    got = kmeans_train(corpus, k=16, n_iter=2).collect()
+    assert sorted(r["cell_id"] for r in got) == sorted(want)
+    for r in got:
+        assert max(abs(a - b) for a, b in zip(r["centroid"], want[r["cell_id"]])) < 1e-9
+
+
+def test_training_set_is_seeds_plus_capped_hash_sample(spark):
+    """A corpus larger than _TRAIN_PER_CELL·k trains on the seeds plus
+    exactly the _TRAIN_PER_CELL·k lowest-xxhash64 others, and repeat
+    calls give identical centroids."""
+    import numpy as np
+
+    k = 2
+    cap = _TRAIN_PER_CELL * k
+    rng = np.random.default_rng(11)
+    n = cap * 3
+    corpus = spark.createDataFrame(
+        [(i, rng.normal(size=4).tolist()) for i in range(n)],
+        "vec_id bigint, embedding array<double>",
+    )
+    hashed = corpus.select("vec_id", F.xxhash64("vec_id").alias("h")).collect()
+    want = sorted((r["h"], r["vec_id"]) for r in hashed if r["vec_id"] >= k)[:cap]
+
+    seeds, others = training_set(corpus, k)
+    assert [vid for vid, _ in seeds] == list(range(k))
+    assert [vid for vid, _ in others] == [vid for _, vid in want]
+
+    a = kmeans_train(corpus, k=k, n_iter=3).collect()
+    b = kmeans_train(corpus, k=k, n_iter=3).collect()
+    assert a == b
+    # trained on the sample alone, not on the other 2·cap vectors
+    replay = _lloyd_replay(seeds, others, n_iter=3)
+    for r in a:
+        assert max(abs(x - y) for x, y in zip(r["centroid"], replay[r["cell_id"]])) < 1e-9

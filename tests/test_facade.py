@@ -370,6 +370,26 @@ def test_upsert_vector_index_appends_only_new_vectors(spark):
         rag.drop_vector_index(name)
 
 
+def test_upsert_vector_index_dedups_repeated_ids_in_a_batch(spark):
+    """A batch that repeats a vec_id appends it once: the IVF index
+    keeps one row per vector."""
+    emb = load_table(spark, "embeddings", SF_DIR)
+    rag = VectorRAG(emb.filter(F.col("vec_id") < 400), load_table(spark, "documents", SF_DIR))
+    name = "t_ivf_idx_dup_batch"
+    rag.drop_vector_index(name)
+    try:
+        rag.create_vector_index(name, kind="ivf", n_cells=16)
+        n0 = spark.table(name).count()
+        v = emb.filter(F.col("vec_id") == 0).first()["embedding"]
+        batch = spark.createDataFrame(
+            [(800001, v), (800002, v), (800001, v)], "vec_id bigint, embedding array<float>"
+        )
+        assert rag.upsert_vector_index(batch, name) == 2
+        assert spark.table(name).count() == n0 + 2
+    finally:
+        rag.drop_vector_index(name)
+
+
 def test_index_build_quarantines_degenerate_vectors(spark):
     """VERDICT r5 task #3: v26's QA gate fronts every M5 index build —
     a planted zero vector and wrong-dim row reach NEITHER the LSH nor

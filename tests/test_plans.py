@@ -17,6 +17,8 @@ the tripwire.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from ai_iceberg_demo_spark.registry import all_registries
@@ -572,3 +574,48 @@ def test_drift_windows_only_see_aggregated_frames(spark):
         tree = plan_of(spark, name).split("\n\n")[0]
         assert "Window (" in tree, tree
         _window_subtrees_are_post_aggregate(tree)
+
+
+SF01 = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+
+
+def _jobs_run(spark, group: str, fn) -> int:
+    """Spark jobs launched by ``fn`` — every job, broadcast and AQE
+    stage jobs included, carries the caller's job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(SF01), reason="sf0.1 fixture absent (single-fixture environment)"
+)
+def test_ivf_index_lifecycle_job_budget(spark):
+    """The IVF build trains on the driver and assigns map-only, and an
+    upsert computes its new rows once: at sf0.1 a 16-cell build runs at
+    most 6 Spark jobs (the distributed trainer ran 24) and a one-vector
+    upsert at most 10 (12 when the rows were computed twice)."""
+    from ai_iceberg_demo_spark.facade import VectorRAG
+    from ai_iceberg_demo_spark.tables import load_table
+
+    emb = load_table(spark, "embeddings", SF01)
+    rag = VectorRAG(emb, load_table(spark, "documents", SF01))
+    name = "t_ivf_job_budget"
+    rag.drop_vector_index(name)
+    try:
+        build = _jobs_run(
+            spark,
+            "t_ivf_build",
+            lambda: rag.create_vector_index(name, kind="ivf", n_cells=16),
+        )
+        assert build <= 6, build
+        v = emb.filter("vec_id = 5").first()["embedding"]
+        batch = spark.createDataFrame([(900000, v)], "vec_id bigint, embedding array<float>")
+        upsert = _jobs_run(spark, "t_ivf_upsert", lambda: rag.upsert_vector_index(batch, name))
+        assert upsert <= 10, upsert
+    finally:
+        rag.drop_vector_index(name)

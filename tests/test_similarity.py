@@ -73,6 +73,22 @@ def test_ivf_trained_centroids_recall_at_least_seed(spark):
     assert len(trained & exact) / len(exact) >= 0.8
 
 
+def test_assign_cells_ties_go_to_lowest_cell_id(spark):
+    """A vector at equal cosine to two centroids lands in the lower
+    cell_id, whatever order the centroid rows arrive in."""
+    from ai_iceberg_demo_spark.vector.similarity import assign_cells
+
+    cells = [(7, [0.0, 1.0, 0.0]), (3, [1.0, 0.0, 0.0]), (5, [0.0, 0.0, 1.0])]
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 1.0, 0.0]), (2, [0.0, 2.0, 2.0]), (3, [0.0, 1.0, 0.5])],
+        "vec_id bigint, embedding array<double>",
+    )
+    for order in (cells, cells[::-1]):
+        centroids = spark.createDataFrame(order, "cell_id bigint, centroid array<double>")
+        got = {r["vec_id"]: r["cell_id"] for r in assign_cells(corpus, centroids).collect()}
+        assert got == {1: 3, 2: 5, 3: 7}
+
+
 def test_ivf_deterministic(spark):
     from ai_iceberg_demo_spark.vector.similarity import ivf_topk
 
